@@ -21,7 +21,7 @@ if _REPO not in sys.path:
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: treat sf0.001 `events` as a CDC binlog over doc keys, replay
-    it through the full engine (envelope parse → DLQ → vectorized normalize →
+    it through the full engine (envelope parse → DLQ → JVM normalize →
     LWW dedup → bucketed copy-on-write MERGE with exactly-once ledger) into a
     fresh LakeTable, and return the final live state.
 

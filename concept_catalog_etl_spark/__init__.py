@@ -7,8 +7,8 @@ Iceberg-style lake table of pre-tokenized training sequences
 ``(doc_id:string, tokens:array<int>, n_tok:int, source:string)`` with
 key-partitioned MERGE, last-writer-wins dedup on ``(doc_id, event_ts, lsn)``,
 schema evolution, exactly-once commits via a batch-id ledger in snapshot
-properties, vectorized Arrow/pandas UDF transforms, and resumable
-checkpointed streaming replay.
+properties, record transforms as JVM codegen expressions (no Python on
+the record path), and resumable checkpointed streaming replay.
 
 Layout:
     lakehouse/   Parquet + JSON-manifest table format (snapshots, atomic commit,
@@ -16,7 +16,7 @@ Layout:
                  partition-spec evolution, multi-table catalog with atomic
                  cuts and cross-table transactions)
     operators/   envelope parse/DLQ, LWW dedup, copy-on-write MERGE, skew tools
-    functions/   vectorized pandas UDFs, reference-repair re-expression,
+    functions/   the query suite's pandas UDF, reference-repair re-expression,
                  text analysis, dedup (minhash/simhash), similarity, multimodal
     sources/     deterministic synthetic binlog generator
     streaming/   Structured Streaming foreachBatch replay + batch replay driver

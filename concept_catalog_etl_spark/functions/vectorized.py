@@ -1,135 +1,16 @@
-"""Vectorized (Arrow/pandas) record transforms — the engine's only Python path.
+"""Vectorized (Arrow/pandas) UDFs.
 
-The north_star mandates: token payload normalization, ``n_tok`` recomputation
-and source tagging run as vectorized pandas/Arrow UDFs, with **no per-row
-Python UDFs** anywhere. Everything else stays in JVM-side
-``pyspark.sql.functions`` expressions (whole-stage codegen).
-
-Semantics carried over from the reference:
-
-* ``WRAP_RE`` is the reference's repair regex
-  (``/root/reference/files/transform.py:37`` and ``files/extract.py:22``):
-  strips the ``{'no': '…'}`` / ``{"no": "…"}`` wrapper, capture group 1 is
-  the payload. Our engine applies it only to elements that match (the safe
-  semantics SURVEY.md §2 O9 calls out — the reference would crash on a
-  truthy non-matching element).
-* ``n_tok`` recomputation is the analog of the reference's diff==10
-  invariant (``/root/reference/files/transform.py:38-42``): the stored count
-  must equal the recomputed one; the engine repairs and counts violations
-  rather than failing the pipeline.
+The engine's record transforms (token payload normalization, ``n_tok``
+recomputation, source tagging) do not live here: they run as JVM codegen
+column expressions in ``operators/merge.py``, with no Python at all. What
+remains is the array-length UDF the query suite uses to exercise an
+``ArrowEvalPython`` plan; the repo never runs per-row Python UDFs.
 """
 
 from __future__ import annotations
 
-import re
-
-import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F, types as T
-
-# The reference's regex, verbatim semantics (anchored, greedy inner, the
-# trailing quote-run absorbed by group 2).
-WRAP_PATTERN = "^{\"?'?no\"?'?: ?\"?'?(.*)(\"+|'+)}$"
-_WRAP_RE = re.compile(WRAP_PATTERN)
-
-
-@F.pandas_udf(T.ArrayType(T.IntegerType()))
-def normalize_tokens(tokens: pd.Series, tokens_raw: pd.Series) -> pd.Series:
-    """Token payload normalization (vectorized).
-
-    Each event carries either ``payload.tokens`` (already an int array) or
-    ``payload.tokens_raw`` — a wrapped text form ``"{'no': '12 7 9'}"`` of
-    space-separated token ids (the analog of the reference's stringified-dict
-    accident). Returns the normalized int32 array; None when neither side is
-    usable (caller routes those to the DLQ).
-    """
-    # str.extract is vectorized over the whole Arrow batch
-    extracted = tokens_raw.astype("string").str.extract(_WRAP_RE, expand=False)[0]
-
-    out: list[object] = []
-    for tok, raw in zip(tokens, extracted):
-        if tok is not None and not (isinstance(tok, float) and pd.isna(tok)):
-            out.append(np.asarray(tok, dtype=np.int32))
-        elif isinstance(raw, str):
-            s = raw.strip()
-            if not s:
-                out.append(np.array([], dtype=np.int32))
-            else:
-                try:
-                    out.append(np.fromiter((int(x) for x in s.split()), dtype=np.int32))
-                except ValueError:
-                    out.append(None)
-        else:
-            out.append(None)
-    return pd.Series(out, dtype=object)
-
-
-@F.pandas_udf(T.IntegerType())
-def recompute_n_tok(tokens: pd.Series) -> pd.Series:
-    """``n_tok := size(tokens)`` recomputed from the data (diff==10 analog)."""
-    return pd.Series(
-        [len(t) if t is not None and not (isinstance(t, float) and pd.isna(t)) else None for t in tokens],
-        dtype="Int32",
-    )
-
-
-@F.pandas_udf(T.StringType())
-def tag_source(source: pd.Series) -> pd.Series:
-    """Source tagging: normalize to the known enum, default ``"crawl"``."""
-    s = source.astype("string").str.strip().str.lower()
-    known = s.isin(["crawl", "curated", "synthetic"])
-    return s.where(known, "crawl")
-
-
-_NORM_STRUCT = T.StructType(
-    [
-        T.StructField("tokens", T.ArrayType(T.IntegerType())),
-        T.StructField("n_tok", T.IntegerType()),
-        T.StructField("source", T.StringType()),
-        T.StructField("ntok_mismatch", T.BooleanType()),
-    ]
-)
-
-
-@F.pandas_udf(_NORM_STRUCT)
-def normalize_payload(
-    tokens: pd.Series, tokens_raw: pd.Series, n_tok_claimed: pd.Series, source: pd.Series
-) -> pd.DataFrame:
-    """All three mandated record transforms in ONE Arrow round trip
-    (token normalization + n_tok recompute + source tagging), with the
-    mismatch flag for the dq counter. Hot loops only touch the wrapped-text
-    minority; everything else is pandas/numpy C paths."""
-    extracted = tokens_raw.astype("string").str.extract(_WRAP_RE, expand=False)[0]
-    out_tokens: list[object] = []
-    for tok, raw in zip(tokens, extracted):
-        if tok is not None and not (isinstance(tok, float) and pd.isna(tok)):
-            out_tokens.append(np.asarray(tok, dtype=np.int32))
-        elif isinstance(raw, str):
-            s = raw.strip()
-            if not s:
-                out_tokens.append(np.array([], dtype=np.int32))
-            else:
-                try:
-                    out_tokens.append(np.fromiter((int(x) for x in s.split()), dtype=np.int32))
-                except ValueError:
-                    out_tokens.append(None)
-        else:
-            out_tokens.append(None)
-    n_tok = pd.Series(
-        [len(t) if t is not None else None for t in out_tokens], dtype="Int32"
-    )
-    src = source.astype("string").str.strip().str.lower()
-    src = src.where(src.isin(["crawl", "curated", "synthetic"]), "crawl")
-    claimed = pd.to_numeric(n_tok_claimed, errors="coerce").astype("Int32")
-    mism = claimed.notna() & n_tok.notna() & (claimed != n_tok)
-    return pd.DataFrame(
-        {
-            "tokens": pd.Series(out_tokens, dtype=object),
-            "n_tok": n_tok,
-            "source": src,
-            "ntok_mismatch": mism.fillna(False),
-        }
-    )
 
 
 @F.pandas_udf(T.IntegerType())

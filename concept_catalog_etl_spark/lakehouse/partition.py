@@ -131,6 +131,3 @@ def part_value(value, transform: str) -> str | None:
         )
     return None
 
-
-def source_field(schema: TableSchema, spec: dict):
-    return schema.field_by_id(int(spec["field_id"]))

@@ -268,6 +268,26 @@ def _specs_by_id(snap: dict) -> dict[int, dict | None] | None:
     }
 
 
+def ledger_has(props: dict, batch_id: int, writer_id: str | None = None) -> bool:
+    """Whether snapshot properties ``props`` record ``batch_id`` as committed
+    in the ledger of ``writer_id`` (None = the main ledger)."""
+    if writer_id is not None:
+        led = props.get("writer_ledgers", {}).get(writer_id, {})
+        ring = led.get("ring", [])
+        if batch_id in set(ring):
+            return True
+        floor = min(ring) if ring else led.get("max")
+        return floor is not None and batch_id < floor
+    ring = props.get("committed_batch_ids", [])
+    if batch_id in set(ring):
+        return True
+    # foreachBatch ids are monotonic; anything at/below the high-water mark
+    # that fell out of the ring was committed long ago. Sound only within
+    # ONE writer's id sequence — concurrent writers pass writer_id above.
+    floor = min(ring) if ring else props.get("max_batch_id")
+    return floor is not None and batch_id < floor
+
+
 class LakeTable:
     def __init__(self, root: str):
         self.root = root
@@ -480,23 +500,7 @@ class LakeTable:
 
     # ---------------------------------------------------------------- ledger
     def is_committed(self, batch_id: int, writer_id: str | None = None) -> bool:
-        p = self.properties()
-        if writer_id is not None:
-            led = p.get("writer_ledgers", {}).get(writer_id, {})
-            ring = led.get("ring", [])
-            if batch_id in set(ring):
-                return True
-            floor = min(ring) if ring else led.get("max")
-            return floor is not None and batch_id < floor
-        if batch_id in set(p.get("committed_batch_ids", [])):
-            return True
-        mx = p.get("max_batch_id")
-        # foreachBatch ids are monotonic; anything at/below the high-water mark
-        # that fell out of the ring was committed long ago. Sound only within
-        # ONE writer's id sequence — concurrent writers pass writer_id above.
-        ring = p.get("committed_batch_ids", [])
-        floor = min(ring) if ring else (mx if mx is not None else None)
-        return floor is not None and batch_id < floor
+        return ledger_has(self.properties(), batch_id, writer_id)
 
     # ----------------------------------------------------------------- write
     def write_data_files(
@@ -820,7 +824,9 @@ class LakeTable:
         only caller and owns the fold/validation.
 
         Data files, ledger entry, lineage offsets and (optionally) an evolved
-        schema all land in one pointer swap — the exactly-once unit.
+        schema all land in one pointer swap — the exactly-once unit. A
+        ``batch_id`` already in the ledger of the snapshot the commit builds
+        on makes it a no-op that returns that snapshot.
 
         ``new_n_buckets``: bucket-layout evolution (``rebucket``) — the old
         manifests describe buckets that no longer exist, so the manifest set
@@ -835,6 +841,11 @@ class LakeTable:
         # acquired mid-retry still aborts the zombie atomically with the
         # pointer swap it would have won.
         self._validate_fence(writer_id, writer_epoch, snap)
+        # exactly-once: checked on the SAME snapshot the next version number
+        # comes from, so the check is atomic with the 'x'-create of
+        # v{N+1}.json, whatever the caller checked before
+        if batch_id is not None and ledger_has(snap["properties"], batch_id, writer_id):
+            return snap
         if expect_version is not None and snap["version"] != expect_version:
             raise RuntimeError(
                 f"concurrent commit: expected v{expect_version}, found v{snap['version']}"
@@ -1178,8 +1189,11 @@ class LakeTable:
                 conflict = isinstance(e, FileExistsError) or "concurrent commit" in str(e)
                 if not conflict or attempt == max_retries:
                     raise
+                # another writer landed our batch: skip. commit() would skip
+                # it on the next attempt too, but the overlap checks below
+                # run first and would refuse a rewrite that lost to it
                 if batch_id is not None and self.is_committed(batch_id, writer_id):
-                    return self.snapshot()  # another writer landed our batch
+                    return self.snapshot()
                 cur = self.current_version()
                 if isinstance(e, FileExistsError):
                     # the collision target while the pointer sits below it:
@@ -1377,6 +1391,9 @@ class LakeTable:
             raise
         kw = rec["kwargs"]
         batch_id, writer_id = kw.get("batch_id"), kw.get("writer_id")
+        # a shortcut for a re-publish after a crash (it also needs no
+        # base snapshot, which vacuum may have expired since): exactly-once
+        # itself is commit()'s ledger check, atomic with the pointer swap
         if batch_id is not None and self.is_committed(batch_id, writer_id):
             self._cleanup_stage(rec)
             return self.snapshot()

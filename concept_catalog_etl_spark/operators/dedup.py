@@ -16,10 +16,7 @@ Two physical strategies:
 * ``lww_dedup_window`` — ``row_number() OVER (PARTITION BY key ORDER BY ts
   DESC, lsn DESC) = 1``. Needs a full sort-shuffle of all rows per key (no
   partial agg) — kept for oracle parity (it IS the SQL the DuckDB oracle
-  runs) and as the building block for salted demonstration.
-* ``lww_dedup_salted`` — explicit two-phase variant: pre-aggregate per
-  ``(key, salt)`` then finalize per key. On an engine without partial
-  aggregation this is THE skew fix; here it documents/tests the equivalence.
+  runs).
 """
 
 from __future__ import annotations
@@ -152,27 +149,3 @@ def lww_dedup_window(df: DataFrame, key: str | list[str] = "doc_id",
         .drop("_rn")
     )
 
-
-def lww_dedup_salted(df: DataFrame, key: str | list[str] = "doc_id",
-                     ts_col: str = "event_ts",
-                     seq_col: str = "lsn", n_salts: int = 16) -> DataFrame:
-    """Two-phase LWW: (key, salt) partial winners → per-key final winner.
-
-    Salt = hash of the ordering columns (uniform within a key), so phase 1
-    splits a hot key across ``n_salts`` reducers; phase 2 shuffles only
-    ``n_salts`` rows per key.
-    """
-    ks = _keys(key)
-    payload_cols = [c for c in df.columns if c not in ks]
-    salted = df.withColumn(
-        "_salt", F.pmod(F.xxhash64(F.col(ts_col), F.col(seq_col)), F.lit(n_salts))
-    )
-    phase1 = salted.groupBy(*ks, "_salt").agg(
-        F.max_by(F.struct(*payload_cols), _order_struct(ts_col, seq_col)).alias("_w")
-    )
-    phase2 = (
-        phase1.select(*ks, "_w.*")
-        .groupBy(*ks)
-        .agg(F.max_by(F.struct(*payload_cols), _order_struct(ts_col, seq_col)).alias("_w"))
-    )
-    return phase2.select(*ks, "_w.*")

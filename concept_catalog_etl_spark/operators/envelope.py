@@ -304,29 +304,3 @@ def parse_envelope(df: DataFrame, schema: TableSchema,
         "payload", "schema_change", "_dlq_reason",
     )
 
-
-def split_dlq(parsed: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """→ (good, dlq). dlq keeps the raw line for replay (reference fail_log
-    keeps the full payload)."""
-    good = parsed.filter(F.col("_dlq_reason").isNull())
-    dlq = parsed.filter(F.col("_dlq_reason").isNotNull()).select(
-        "_raw", "_dlq_reason", "op", "doc_id", "event_ts", "lsn"
-    )
-    return good, dlq
-
-
-def lineage_offsets(parsed_good: DataFrame, source_col: str | None = "source") -> dict[str, int]:
-    """Per-source max LSN — the per-partition lineage offsets recorded in
-    snapshot properties (lsn is strictly increasing per source stream)."""
-    src = (
-        F.coalesce(F.col(f"payload.{source_col}"), F.lit("_default"))
-        if source_col
-        else F.lit("_default")
-    )
-    rows = (
-        parsed_good.filter(F.col("lsn").isNotNull())
-        .groupBy(src.alias("src"))
-        .agg(F.max("lsn").alias("mx"))
-        .collect()
-    )
-    return {r["src"]: r["mx"] for r in rows}

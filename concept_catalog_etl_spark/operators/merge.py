@@ -7,19 +7,20 @@ sequential per-record ``update_one({'_id': k}, {'$set': payload})`` sink
 Physical design (chosen for 100 TB, verified by ``.explain`` in tests):
 
 1. **Summary first** — schema-change events must be known before the full
-   parse (they decide the parse schema). Steady state: a raw-text substring
-   probe proves no schema_change exists and per-source lineage + structural
-   counts ride the main pipeline's ``observe()`` (zero extra parse jobs).
-   Probe-positive / new-source / brand-new-table batches take the exact
-   light-summary aggregation (envelope head only, never token arrays).
+   parse (they decide the parse schema). Steady state: a raw-text probe for
+   an ``op`` of ``schema_change`` proves none exists and per-source lineage
+   + structural counts ride the main pipeline's ``observe()`` (zero extra
+   parse jobs). Probe-positive / brand-new-table / large-vocabulary batches
+   take the exact light-summary aggregation (envelope head only, never
+   token arrays). The choice is made from the table and the batch alone.
 2. **Schema-change events** apply as metadata, so data events in the same
    batch parse under the evolved schema; renames accept both old and new
    payload names within the transition batch.
-3. **Full parse ONCE + vectorized normalize** — one JVM-side ``from_json``
+3. **Full parse ONCE + JVM normalize** — one JVM-side ``from_json``
    (the dominant per-batch cost — it runs exactly once), then token payload
    normalization, ``n_tok`` recompute, source tagging as codegen column
-   expressions (or one Arrow UDF; north_star: no per-row Python). Malformed
-   events keep flowing, tagged with a reason (reference ``fail_log``).
+   expressions: no Python at all on the record path. Malformed events keep
+   flowing, tagged with a reason (reference ``fail_log``).
 4. **Fused LWW dedup + DLQ capture** in ONE struct-``max``/filtered-
    ``collect_list`` hash aggregation: good rows compete for the per-key
    winner (lexicographic ``max(struct(ts, lsn, payload))``), rejected rows
@@ -62,6 +63,8 @@ from .dedup import lww_dedup_with_sideout, winner_max
 from .envelope import parse_envelope, parse_raw
 
 EPOCH = "1970-01-01 00:00:00"
+# a JSON member op = "schema_change" in raw text (either quote style)
+SCHEMA_CHANGE_OP_RE = r"""["']op["']\s*:\s*["']schema_change["']"""
 
 
 @dataclass
@@ -72,11 +75,6 @@ class MergeConfig:
     ntok_fid: int = 3
     source_fid: int = 4
     write_dlq: bool = True
-    collect_metrics: bool = True
-    # 'jvm' = codegen column expressions (fastest, zero Python);
-    # 'arrow' = one combined struct pandas UDF (single Arrow round trip).
-    # Identical semantics, parity-tested.
-    impl: str = "jvm"
     extra_lineage: dict[str, int] = field(default_factory=dict)
     # 'cow' (copy-on-write): read + rewrite affected buckets per batch —
     #   reads stay shuffle-free, writes amplify with touched-bucket size.
@@ -87,10 +85,6 @@ class MergeConfig:
     #   keys touch every bucket costs a bucket-wide rewrite under cow but
     #   only its own winners under mor.
     write_mode: str = "cow"
-    # steady-state fast path: skip the light summary scan when a raw-text
-    # probe proves the batch has no schema_change events; lineage and
-    # structural counts then ride the main pipeline's observe().
-    fast_summary: bool = True
     # write-audit-publish: STAGE the batch instead of committing it — the
     # returned metrics carry 'stage_id'; the caller audits via
     # table.read_stage and then publish_stage / abort_stage. Readers never
@@ -271,9 +265,9 @@ def _apply_schema_changes(schema: TableSchema, sc_rows: list,
 
 
 def _jvm_norm_tokens(tokens_col: F.Column, raw_col: F.Column) -> F.Column:
-    """JVM-expression token normalization (whole-stage codegen): identical
-    semantics to the Arrow UDF / oracle — wrapped-text repair via the
-    reference regex, blank inner → [], non-numeric token → NULL (DLQ)."""
+    """JVM-expression token normalization (whole-stage codegen), the same
+    semantics as the oracle: wrapped-text repair via the reference regex,
+    blank inner → [], non-numeric token → NULL (DLQ)."""
     from ..functions.reference_repair import WRAP_RE_JAVA
 
     extract = F.regexp_extract(raw_col, WRAP_RE_JAVA, 1)
@@ -294,16 +288,9 @@ def _jvm_tag_source(src: F.Column) -> F.Column:
 
 def _normalize(data: DataFrame, schema: TableSchema, cfg: MergeConfig,
                evolution: dict) -> DataFrame:
-    """Envelope payload → typed change columns. Two vectorized impls with
-    identical semantics (parity-tested):
-
-    * ``impl='jvm'`` (default): whole-stage-codegen column expressions —
-      measured ~4× faster end-to-end than the Arrow hop (ARCHITECTURE.md);
-      zero Python anywhere.
-    * ``impl='arrow'``: one combined struct-returning pandas UDF
-      (single Arrow round trip) — the shape a transform needs when the
-      logic can't be expressed as SQL expressions.
-    """
+    """Envelope payload → typed change columns. Token normalization,
+    ``n_tok`` recompute and source tagging are whole-stage-codegen column
+    expressions: no Python runs anywhere on the record path."""
     keys = schema.key_names
 
     rename_map = evolution.get("map", {})
@@ -402,25 +389,6 @@ def _normalize(data: DataFrame, schema: TableSchema, cfg: MergeConfig,
         return out.withColumn("_ntok_mismatch", F.lit(False))
 
     raw_col = F.col("payload.tokens_raw")
-    if cfg.impl == "arrow":
-        from ..functions.vectorized import normalize_payload
-
-        ns = normalize_payload(
-            pv(tokens_f.name),
-            raw_col,
-            (pv(ntok_f.name).cast("int") if ntok_f is not None else F.lit(None).cast("int")),
-            (pv(source_f.name) if source_f is not None else F.lit(None).cast("string")),
-        )
-        sel.append(ns.alias("_ns"))
-        out = data.select(*sel)
-        out = out.withColumn(tokens_f.name, F.col("_ns.tokens").cast(tokens_f.type))
-        if ntok_f is not None:
-            out = out.withColumn(ntok_f.name, F.col("_ns.n_tok").cast(ntok_f.type))
-        if source_f is not None:
-            out = out.withColumn(source_f.name, F.col("_ns.source"))
-        return out.withColumn("_ntok_mismatch", F.coalesce(F.col("_ns.ntok_mismatch"), F.lit(False))).drop("_ns")
-
-    # default: JVM expressions
     toks = _jvm_norm_tokens(pv(tokens_f.name), raw_col)
     sel.append(toks.cast(tokens_f.type).alias(tokens_f.name))
     if source_f is not None:
@@ -487,34 +455,34 @@ def apply_batch(
     # ---- pass A: summary of the raw batch -------------------------------
     # Schema-change events must be known BEFORE the full parse (they decide
     # the parse schema). Steady state (no schema changes, known source
-    # vocabulary) uses the FAST path: a substring probe over raw text (no
-    # JSON parse) proves no schema_change event exists — the probe cannot
-    # miss (an op of "schema_change" must contain that substring unless
-    # unicode-escaped, and any line containing "\u" falls back) — and
-    # per-source lineage + structural counts ride the main pipeline's
-    # observe() against the table's known source vocabulary (new sources →
-    # one tiny exact follow-up aggregation). Probe-positive or large-
-    # vocabulary batches take the EXACT light-summary aggregation instead.
+    # vocabulary) uses the FAST path: a probe over raw text (no JSON parse)
+    # proves no event has op "schema_change", and per-source lineage +
+    # structural counts ride the main pipeline's observe() against the
+    # table's known source vocabulary (new sources → one tiny exact
+    # follow-up aggregation). Probe-positive or large-vocabulary batches,
+    # and a brand-new table, take the EXACT light-summary aggregation
+    # instead: a new table takes it once to discover its source vocabulary
+    # (otherwise the new-source follow-up would re-parse the whole batch).
     src0 = next((f.name for f in schema.fields if f.id == cfg.source_fid), None)
     known_sources = sorted(table.properties().get("lineage_offsets", {}).keys())
     fast_summary = (
-        cfg.fast_summary
-        and cfg.collect_metrics  # lineage rides the observe()
-        # a brand-new table takes the exact path once to discover the source
-        # vocabulary (otherwise the new-source follow-up re-parses the batch)
-        and 0 < len(known_sources) <= 64
+        0 < len(known_sources) <= 64
         # COST NOTE (text): this probe is a second pass over the batch's raw
-        # text, but a cheap one — substring `contains` on the unparsed line
-        # (no JSON lexing), early-exits on first hit (isEmpty → Limit 1),
-        # and it must run pre-parse because its outcome decides which parse
-        # plan we build. At bench scale the probe is ~5% of batch wall; it
-        # buys skipping the exact light-parse summary aggregation (~2× that
-        # cost) on every schema-stable batch. Columnar input probes the
-        # typed `op` column instead — a pushed predicate over one dictionary-
-        # encoded column chunk, near-free.
+        # text, but a cheap one — one regex over the unparsed line (no JSON
+        # lexing), early-exits on first hit (isEmpty → Limit 1), and it must
+        # run pre-parse because its outcome decides which parse plan we
+        # build. It matches the op VALUE, not the "schema_change" key every
+        # envelope line carries (usually as null). It cannot miss: an op of
+        # schema_change is that key/value pair in either quote style (the
+        # JSON reader accepts single quotes) unless unicode-escaped, and any
+        # line containing "\u" falls back; a payload field named op only
+        # costs a harmless exact-path fallback. Columnar input probes the
+        # typed `op` column instead — a pushed predicate over one
+        # dictionary-encoded column chunk, near-free.
         and (
             raw.filter(
-                F.col("value").contains("schema_change") | F.col("value").contains("\\u")
+                F.col("value").rlike(SCHEMA_CHANGE_OP_RE)
+                | F.col("value").contains("\\u")
             ).isEmpty()
             if is_text
             else (
@@ -702,9 +670,8 @@ def apply_batch(
         metric_aggs.append(
             F.collect_set(F.when(is_new_src, F.col("_src_raw"))).alias("_lin_new")
         )
-    obs = Observation(f"merge_b{batch_id}") if cfg.collect_metrics else None
-    if obs is not None:
-        norm = norm.observe(obs, *metric_aggs)
+    obs = Observation(f"merge_b{batch_id}")
+    norm = norm.observe(obs, *metric_aggs)
 
     payload_names = [f.name for f in schema.fields
                      if f.id not in schema.key_field_ids]
@@ -822,45 +789,40 @@ def apply_batch(
         files = table.write_data_files(result, schema_override=schema)
         _mark("merge_write")
 
-    bad_tokens = 0
-    if obs is not None:
-        # Observation values become available once the dedup/write actions
-        # ran. Empty batches can get their CollectMetrics node pruned
-        # (empty-relation propagation) → fall back to a direct aggregation.
-        acted = bool(affected) or bool(files)
-        try:
-            m = dict(obs.get) if acted else norm.agg(*metric_aggs).collect()[0].asDict()
-        except Exception:
-            m = norm.agg(*metric_aggs).collect()[0].asDict()
-        if fast_summary:
-            structural_dlq = int(m.pop("_structural_dlq", 0) or 0)
-            new_srcs = [s for s in (m.pop("_lin_new", []) or []) if s is not None]
-            for i, s in enumerate(known_sources):
-                v = m.pop(f"_lin_{i}", None)
-                if v is not None:
-                    lineage[s] = int(v)
-            if new_srcs:
-                # rare: first sighting of a source — one exact follow-up agg
-                # (goodish, like good_lin: bad_tokens rows advance lineage)
-                for r in (
-                    norm.filter(goodish & F.col("_src_raw").isin(new_srcs))
-                    .groupBy("_src_raw")
-                    .agg(F.max("lsn").alias("mx"))
-                    .collect()
-                ):
-                    if r["mx"] is not None:
-                        lineage[r["_src_raw"]] = int(r["mx"])
-            events_total = (int(m.get("events_data", 0) or 0) + structural_dlq
-                            + int(m.get("check_violations", 0) or 0))
-        metrics.update({k: (int(v) if v is not None else 0) for k, v in m.items()})
-        bad_tokens = metrics.get("bad_tokens", 0)
-        # ingest lag: wall-clock now vs newest event applied this batch
-        import time as _time
-
-        if metrics.get("max_event_ts_us"):
-            metrics["ingest_lag_sec"] = round(
-                _time.time() - metrics["max_event_ts_us"] / 1e6, 3
-            )
+    # Observation values become available once the dedup/write actions
+    # ran. Empty batches can get their CollectMetrics node pruned
+    # (empty-relation propagation) → fall back to a direct aggregation.
+    acted = bool(affected) or bool(files)
+    try:
+        m = dict(obs.get) if acted else norm.agg(*metric_aggs).collect()[0].asDict()
+    except Exception:
+        m = norm.agg(*metric_aggs).collect()[0].asDict()
+    if fast_summary:
+        structural_dlq = int(m.pop("_structural_dlq", 0) or 0)
+        new_srcs = [s for s in (m.pop("_lin_new", []) or []) if s is not None]
+        for i, s in enumerate(known_sources):
+            v = m.pop(f"_lin_{i}", None)
+            if v is not None:
+                lineage[s] = int(v)
+        if new_srcs:
+            # rare: first sighting of a source — one exact follow-up agg
+            # (goodish, like good_lin: bad_tokens rows advance lineage)
+            for r in (
+                norm.filter(goodish & F.col("_src_raw").isin(new_srcs))
+                .groupBy("_src_raw")
+                .agg(F.max("lsn").alias("mx"))
+                .collect()
+            ):
+                if r["mx"] is not None:
+                    lineage[r["_src_raw"]] = int(r["mx"])
+        events_total = (int(m.get("events_data", 0) or 0) + structural_dlq
+                        + int(m.get("check_violations", 0) or 0))
+    metrics.update({k: (int(v) if v is not None else 0) for k, v in m.items()})
+    # ingest lag: wall-clock now vs newest event applied this batch
+    if metrics.get("max_event_ts_us"):
+        metrics["ingest_lag_sec"] = round(
+            _time.time() - metrics["max_event_ts_us"] / 1e6, 3
+        )
     _mark("observe_metrics")
     metrics["rows_written"] = int(sum(f["rows"] for f in files))
     metrics["buckets_rewritten"] = len(affected)
@@ -868,14 +830,11 @@ def apply_batch(
     metrics["write_mode"] = cfg.write_mode
 
     # ---- DLQ side-output: explode the captured bad rows (no re-scan) ----
-    dlq_count = (structural_dlq + int(bad_tokens)
-                 + int(metrics.get("check_violations", 0) or 0))
-    if cfg.write_dlq and (dlq_count > 0 or obs is None):
+    dlq_count = (structural_dlq + metrics["bad_tokens"]
+                 + metrics.get("check_violations", 0))
+    if cfg.write_dlq and dlq_count:
         bad_df = deduped_all.select(F.explode("_bad").alias("b")).select("b.*")
-        if obs is None:
-            dlq_count = bad_df.count()
-        if dlq_count:
-            table.write_dlq(bad_df, batch_id, cfg.writer_id)
+        table.write_dlq(bad_df, batch_id, cfg.writer_id)
     metrics["dlq_count"] = int(dlq_count)
     _mark("dlq")
 

@@ -4,8 +4,7 @@
     spark-submit --py-files dist/engine.zip submit_main.py \
         --binlog-dir /data/binlog --table /lake/concepts \
         --checkpoint /lake/_ckpt/concepts [--mode stream|batch] \
-        [--n-buckets 1024] [--files-per-batch 10] [--impl jvm|arrow]
-        [--write-mode cow|mor]
+        [--n-buckets 1024] [--files-per-batch 10] [--write-mode cow|mor]
 
 On a cluster the session comes from the cluster manager (no .master here);
 locally it falls back to local[*]. Replaces the reference's Makefile
@@ -29,7 +28,6 @@ def main() -> None:
     ap.add_argument("--mode", choices=["stream", "batch"], default="stream")
     ap.add_argument("--n-buckets", type=int, default=1024)
     ap.add_argument("--files-per-batch", type=int, default=10)
-    ap.add_argument("--impl", choices=["jvm", "arrow"], default="jvm")
     ap.add_argument("--write-mode", choices=["cow", "mor"], default="cow")
     ap.add_argument(
         "--audit-max-delete-ratio", type=float, default=None,
@@ -96,7 +94,7 @@ def main() -> None:
         )
         table = LakeTable.create(args.table, schema, n_buckets=args.n_buckets)
 
-    cfg = MergeConfig(impl=args.impl, write_mode=args.write_mode)
+    cfg = MergeConfig(write_mode=args.write_mode)
     audit = None
     if args.audit_max_delete_ratio is not None:
         ratio = args.audit_max_delete_ratio

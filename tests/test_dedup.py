@@ -1,4 +1,4 @@
-"""LWW dedup unit + property tests (SURVEY.md §5): the three physical
+"""LWW dedup unit + property tests (SURVEY.md §5): the physical
 strategies agree, ties break on lsn, results are permutation-invariant."""
 
 import datetime as dt
@@ -6,10 +6,12 @@ import datetime as dt
 from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import types as T
 
+from pyspark.sql import functions as F
+
 from concept_catalog_etl_spark.operators.dedup import (
     lww_dedup,
-    lww_dedup_salted,
     lww_dedup_window,
+    lww_dedup_with_sideout,
 )
 
 SCHEMA = T.StructType(
@@ -51,11 +53,14 @@ def test_lww_basic_and_tie_break(spark):
 
 
 def test_three_strategies_agree(spark):
+    """The max_by hash aggregation, the window reference and the fused
+    struct-max kernel the merge runs pick the same winners."""
     rows = [("k%d" % (i % 7), i % 13, i, i * 10) for i in range(200)]
     df = _df(spark, rows)
     a = _result(lww_dedup(df))
     b = _result(lww_dedup_window(df))
-    c = _result(lww_dedup_salted(df, n_salts=4))
+    fused = lww_dedup_with_sideout(df.withColumn("_dlq_reason", F.lit(None).cast("string")))
+    c = _result(fused.select("doc_id", "_w.*"))
     assert a == b == c
 
 

@@ -1,67 +1,26 @@
 """Vectorized UDFs + skew tooling unit tests."""
 
-from pyspark.sql import functions as F, types as T
-
-from concept_catalog_etl_spark.functions.vectorized import (
-    arr_len,
-    normalize_tokens,
-    recompute_n_tok,
-    tag_source,
-)
+from concept_catalog_etl_spark.functions.vectorized import arr_len
 from concept_catalog_etl_spark.operators.skew import (
     hot_key_histogram,
     salted_join,
 )
 
-NORM_SCHEMA = T.StructType(
-    [
-        T.StructField("tokens", T.ArrayType(T.IntegerType())),
-        T.StructField("tokens_raw", T.StringType()),
-    ]
-)
 
-
-def test_normalize_tokens_paths(spark):
-    rows = [
-        ([1, 2, 3], None),                     # already-array passthrough
-        (None, "{'no': '4 5 6'}"),             # wrapped single-quote
-        (None, '{"no": "7"}'),                 # wrapped double-quote
-        (None, "{'no': ''}"),                  # empty inner → []
-        (None, "unwrapped garbage"),           # unparseable → null
-        (None, None),                          # nothing → null
-    ]
-    df = spark.createDataFrame(rows, NORM_SCHEMA)
-    got = [
-        r["t"]
-        for r in df.select(normalize_tokens("tokens", "tokens_raw").alias("t")).collect()
-    ]
-    assert got == [[1, 2, 3], [4, 5, 6], [7], [], None, None]
-
-
-def test_recompute_n_tok_and_arr_len(spark):
+def test_arr_len(spark):
     df = spark.createDataFrame(
         [([1, 2],), ([],), (None,)], "tokens array<int>"
     )
-    got = [r["n"] for r in df.select(recompute_n_tok("tokens").alias("n")).collect()]
+    got = [r["n"] for r in df.select(arr_len("tokens").alias("n")).collect()]
     assert got == [2, 0, None]
-    got2 = [r["n"] for r in df.select(arr_len("tokens").alias("n")).collect()]
-    assert got2 == [2, 0, None]
-
-
-def test_tag_source(spark):
-    df = spark.createDataFrame(
-        [("crawl",), (" Curated ",), ("weird",), (None,)], "source string"
-    )
-    got = [r["s"] for r in df.select(tag_source("source").alias("s")).collect()]
-    assert got == ["crawl", "curated", "crawl", "crawl"]
 
 
 def test_no_row_at_a_time_python_udfs_in_plan(spark):
-    """north_star: the normalize path must be ArrowEvalPython (vectorized),
-    never BatchEvalPython (per-row pickling)."""
-    df = spark.createDataFrame([([1],  None)], NORM_SCHEMA)
+    """A pandas UDF runs as ArrowEvalPython (vectorized), never
+    BatchEvalPython (per-row pickling)."""
+    df = spark.createDataFrame([([1],)], "tokens array<int>")
     plan = (
-        df.select(normalize_tokens("tokens", "tokens_raw").alias("t"))
+        df.select(arr_len("tokens").alias("n"))
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "ArrowEvalPython" in plan

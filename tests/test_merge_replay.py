@@ -130,19 +130,47 @@ def test_delete_removes_row_and_bucket_rewrite_is_scoped(spark, scratch, binlog)
     assert {k: v for k, v in state.items() if k != victim} == state2
 
 
-def test_fast_summary_equals_exact_summary(spark, scratch, binlog):
+def test_fast_summary_equals_exact_summary(spark, scratch, binlog, monkeypatch):
     """The steady-state fast path (schema-change probe + observe-borne
     lineage/counts) must produce identical table state, lineage offsets and
-    batch accounting to the exact light-summary aggregation."""
-    from concept_catalog_etl_spark.operators.merge import MergeConfig
+    batch accounting to the exact light-summary aggregation. The exact side
+    is reached through input alone: the same events with one character per
+    file written as a JSON unicode escape, which the probe cannot see
+    through."""
+    from concept_catalog_etl_spark.operators import merge
 
     _d, paths = binlog
+    escaped = []
+    for p in paths:
+        q = os.path.join(scratch, "escaped", os.path.basename(p))
+        os.makedirs(os.path.dirname(q), exist_ok=True)
+        with open(p) as f:
+            text = f.read()
+        assert '"doc_id"' in text
+        with open(q, "w") as f:
+            f.write(text.replace('"doc_id"', '"\\u0064oc_id"', 1))
+        escaped.append(q)
+
+    light_calls: list = []
+    parse_raw = merge.parse_raw
+
+    def spy(*a, **kw):
+        if kw.get("light"):
+            light_calls.append(kw["light"])
+        return parse_raw(*a, **kw)
+
+    monkeypatch.setattr(merge, "parse_raw", spy)
     t_fast = make_table(os.path.join(scratch, "fast"))
     t_exact = make_table(os.path.join(scratch, "exact"))
-    m_fast = replay_batch(spark, paths, t_fast, files_per_batch=3,
-                          cfg=MergeConfig(fast_summary=True))
-    m_exact = replay_batch(spark, paths, t_exact, files_per_batch=3,
-                           cfg=MergeConfig(fast_summary=False))
+    m_fast = replay_batch(spark, paths, t_fast, files_per_batch=3)
+    n_fast = len(light_calls)
+    m_exact = replay_batch(spark, escaped, t_exact, files_per_batch=3)
+    n_exact = len(light_calls) - n_fast
+    assert len(m_fast) == len(m_exact) > 1
+    # a new table light-parses once to learn its sources; after that the
+    # probe clears every plain batch, and sees every escaped one
+    assert n_fast == 1
+    assert n_exact == len(m_exact)
     assert table_state(spark, t_fast) == table_state(spark, t_exact)
     assert (t_fast.properties()["lineage_offsets"]
             == t_exact.properties()["lineage_offsets"])
@@ -150,6 +178,29 @@ def test_fast_summary_equals_exact_summary(spark, scratch, binlog):
         for k in ("events_total", "events_data", "dlq_count", "deletes_seen",
                   "bad_tokens", "rows_written"):
             assert a[k] == b[k], (k, a[k], b[k])
+
+
+def test_schema_change_probe_matches_the_op_value(spark):
+    """The text probe fires on an op of schema_change in any spelling the
+    JSON reader accepts (spaces, single quotes), and not on the null
+    schema_change member every data line carries."""
+    from pyspark.sql import functions as F
+
+    from concept_catalog_etl_spark.operators.merge import SCHEMA_CHANGE_OP_RE
+
+    lines = {
+        '{"op":"schema_change","schema_change":{"kind":"add"}}': True,
+        '{"op" : "schema_change"}': True,
+        "{'op': 'schema_change'}": True,
+        '{"op": "insert", "payload": {}, "schema_change": null}': False,
+        '{"op":"update","schema_change":null}': False,
+    }
+    df = spark.createDataFrame([(v,) for v in lines], "value string")
+    hits = {r["value"] for r in df.filter(F.col("value").rlike(SCHEMA_CHANGE_OP_RE)).collect()}
+    assert hits == {v for v, hit in lines.items() if hit}
+    # the single-quoted spelling is a real schema change to the reader
+    ops = df.select(F.from_json("value", "op string").op.alias("op")).collect()
+    assert ops[2]["op"] == "schema_change"
 
 
 def test_null_schema_change_struct_is_dlq_not_poison(spark, scratch):

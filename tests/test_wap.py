@@ -422,6 +422,31 @@ def test_publish_from_separate_process_and_double_publish_race(spark, scratch):
     assert t.read(spark).filter(F.col("doc_id") == "doc-000012").count() == 1
 
 
+def test_stale_ledger_check_then_publish_is_exactly_once(spark, scratch):
+    """The interleaving behind the double-publish race, made deterministic:
+    publisher B passes its ledger check, publisher A then publishes the
+    whole stage, and only then does B reach the commit with the stage's
+    stored kwargs. The ledger check inside the commit, on the snapshot the
+    commit builds on, turns B into a no-op."""
+    t = make_table(scratch, n_buckets=4)
+    t.commit(add_files=t.write_data_files(_rows(spark, range(10))), batch_id=0)
+    sid = t.stage_commit(
+        add_files=t.write_data_files(_rows(spark, range(10, 16), lsn0=60)),
+        batch_id=1,
+    )
+    kw = t._load_stage(sid)["kwargs"]  # B loads the stage, checks: not committed
+    assert not t.is_committed(1)
+    t.publish_stage(sid)  # A publishes it all
+    v = t.current_version()
+    t.commit_with_retry(  # B goes on to commit, as publish_stage would
+        add_files=kw["add_files"], batch_id=kw["batch_id"],
+        writer_id=kw["writer_id"], lineage=kw.get("lineage"),
+        metrics=kw.get("metrics"), writer_epoch=kw.get("writer_epoch"),
+    )
+    assert t.current_version() == v
+    assert t.read(spark).count() == 16
+
+
 def test_stage_anchors_at_merge_read_version(spark, scratch):
     """A COW merge computed against v1 must not STAGE across a commit that
     landed mid-merge — the stage itself raises, mirroring the non-stage
